@@ -11,6 +11,7 @@ Namespaces mirror the medallion: bronze/silver/gold/audit.
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 import threading
@@ -20,6 +21,21 @@ from contextlib import contextmanager
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
+
+
+def _nullable(dt: T.DataType) -> T.DataType:
+    """``dt`` with every field, element and value nullable — the form a
+    parquet read reports (Spark's ``asNullable``)."""
+    if isinstance(dt, T.StructType):
+        return T.StructType(
+            [T.StructField(f.name, _nullable(f.dataType), True, f.metadata) for f in dt]
+        )
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_nullable(dt.elementType), True)
+    if isinstance(dt, T.MapType):
+        return T.MapType(_nullable(dt.keyType), _nullable(dt.valueType), True)
+    return dt
 
 
 class Warehouse:
@@ -825,13 +841,14 @@ class VersionedWarehouse(Warehouse):
         finally:
             stop.set()
 
-    def _link_forward(self, namespace: str, table: str, vdir: Path) -> None:
+    def _link_forward(self, namespace: str, table: str, vdir: Path) -> int | None:
         """Hard-link the published snapshot's files into a claimed new
         version directory (Delta's append commit re-adds prior files to
-        the log; here links make that O(#files), zero bytes copied)."""
+        the log; here links make that O(#files), zero bytes copied).
+        Returns the linked version (None: the table had none)."""
         cur = self.current_version(namespace, table)
         if cur is None:
-            return
+            return None
         src = self.path(namespace, table) / f"_v{cur}"
         for f in sorted(src.rglob("*")):
             if f.name == ".op":
@@ -846,6 +863,7 @@ class VersionedWarehouse(Warehouse):
                     os.link(f, dst)
                 except OSError:
                     shutil.copy2(f, dst)
+        return cur
 
     def append(
         self,
@@ -861,11 +879,17 @@ class VersionedWarehouse(Warehouse):
         with self._append_lock(namespace, table):
             nxt, vdir = self._claim_next(namespace, table)
             with self._claim_keepalive(vdir):
-                self._link_forward(namespace, table, vdir)
+                first = self._link_forward(namespace, table, vdir) is None
                 w = df.write.mode("append")
                 if partition_by:
                     w = w.partitionBy(*partition_by)
                 w.parquet(str(vdir))
+                # the linked-forward record stays true only while every
+                # file carries its schema; a first append starts one
+                schema = None if partition_by else _nullable(df.schema)
+                if not (first or schema == self._recorded_schema(vdir)):
+                    schema = None
+                self._record_schema(vdir, schema)
                 self._stamp(vdir, "APPEND")
             self._publish(namespace, table, nxt)
 
@@ -931,13 +955,20 @@ class VersionedWarehouse(Warehouse):
         claim leaves an empty ``_vN`` that is never reused, never published,
         and is swept by ``vacuum``. The write APPENDS into the claimed
         empty directory (an overwrite would delete-and-recreate it, opening
-        a window where a competitor could re-claim the same number)."""
+        a window where a competitor could re-claim the same number).
+
+        The written frame's schema is recorded in the version directory
+        (see ``_record_schema``) so ``read`` needs no inference job.
+        Partitioned commits record none: their partition column types come
+        from directory-name inference."""
         nxt, vdir = self._claim_next(namespace, table)
         with self._claim_keepalive(vdir):
             w = df.write.mode("append")
             if partition_by:
                 w = w.partitionBy(*partition_by)
             w.parquet(str(vdir))
+            if not partition_by:
+                self._record_schema(vdir, _nullable(df.schema))
             self._stamp(vdir, op)
         self._publish(namespace, table, nxt)
         return nxt
@@ -1029,6 +1060,29 @@ class VersionedWarehouse(Warehouse):
         before publish, so a published version always carries its stamp).
         The hidden dot-name keeps it out of Spark's parquet file listing."""
         (vdir / ".op").write_text(op)
+
+    @staticmethod
+    def _record_schema(vdir: Path, schema: T.StructType | None) -> None:
+        """Record (or, with None, drop) the version's schema in the hidden
+        ``.schema`` file — Delta keeps the table schema in its log the same
+        way. The record is the schema Spark would infer from the version's
+        files, so ``read`` can skip the footer-inference job. Version
+        directories carry it forward with their files (link-forward,
+        restore, partition compaction); the old link is removed before a
+        new record is written, since writing through a shared inode would
+        rewrite the SOURCE version's record."""
+        rec = vdir / ".schema"
+        rec.unlink(missing_ok=True)
+        if schema is not None:
+            rec.write_text(schema.json())
+
+    @staticmethod
+    def _recorded_schema(vdir: Path) -> T.StructType | None:
+        try:
+            raw = (vdir / ".schema").read_text()
+        except FileNotFoundError:
+            return None  # unrecorded version: the reader infers
+        return T.StructType.fromJson(json.loads(raw))
 
     def history(self, namespace: str, table: str) -> list[dict]:
         """Delta ``DESCRIBE HISTORY`` parity: one entry per retained
@@ -1174,7 +1228,9 @@ class VersionedWarehouse(Warehouse):
     ) -> DataFrame:
         """Read the published snapshot (or time-travel to `version`).
         ``merge_schema`` matches the base-class signature so inherited
-        callers (append_evolve) work polymorphically."""
+        callers (append_evolve) work polymorphically. A version with a
+        recorded schema is read under it, which submits no Spark job; the
+        rest (and every ``merge_schema`` read) infer from the footers."""
         v = version if version is not None else self.current_version(namespace, table)
         if v is None:
             raise FileNotFoundError(
@@ -1188,6 +1244,10 @@ class VersionedWarehouse(Warehouse):
         r = self.spark.read
         if merge_schema:
             r = r.option("mergeSchema", "true")
+        else:
+            schema = self._recorded_schema(vdir)
+            if schema is not None:
+                r = r.schema(schema)
         return r.parquet(str(vdir))
 
     def compact_partition(

@@ -54,47 +54,59 @@ def scd2_merge(
     """Return the post-merge table state (lazy plan; caller persists).
 
     target: full SCD2 table (payload + is_current, audit_insertdate,
-            audit_modifieddate). source: conformed batch, unique per key,
-            payload columns only.
+            audit_modifieddate), at most one current row per key.
+            source: conformed batch, unique per key, payload columns only.
+
+    Both MERGE passes are ONE full-outer equi-join of the current rows and
+    the batch on the key. Each joined row emits its post-merge rows through
+    a single generator (``inline`` over an array of structs):
+
+      current only          -> the current row, kept
+      batch only            -> a new current row (new key, or a NULL key)
+      both, changed         -> the current row expired + a new current row
+      both, not changed     -> the current row, kept
+
+    History rows bypass the join and are unioned back untouched. A plan
+    that referenced the join from several branches would have Catalyst
+    re-derive it once per branch, each a job of its own.
+
+    Scale trade-off: a full outer join cannot broadcast, so the current
+    rows are hash-partitioned on the key once per batch — the shuffle
+    MERGE itself runs — instead of being streamed, once per branch,
+    against a broadcast batch.
     """
-    payload = [c for c in source.columns]
+    cols = target.columns
     ts = F.lit(now).cast("timestamp")
 
     hist = target.filter(~F.col("is_current"))
-    cur = target.filter(F.col("is_current"))
-
+    cur = target.filter(F.col("is_current")).withColumn("_in_cur", F.lit(True))
     src = source.select(
-        F.col(key).alias("_src_key"),
-        *[F.col(c).alias(f"_src_{c}") for c in payload if c != key],
+        *[F.col(c).alias(f"_src_{c}") for c in source.columns],
+        F.lit(True).alias("_in_src"),
     )
+    j = cur.join(src, cur[key] == src[f"_src_{key}"], "full_outer")
 
-    # one equi-join on the key serves both MERGE passes
-    j = cur.join(src, cur[key] == src["_src_key"], "left")
-    changed = F.col("_src_key").isNotNull() & _any_changed(
-        [c for c in compare_cols if c != key]
-    )
+    def row(values: dict[str, Column]) -> Column:
+        return F.struct(*[values.get(c, F.col(c)).alias(c) for c in cols])
 
-    expired = (
-        j.filter(changed)
-        .select(*[F.col(c) for c in target.columns])
-        .withColumn("is_current", F.lit(False))
-        .withColumn("audit_modifieddate", ts)
+    kept = row({})
+    expired = row({"is_current": F.lit(False), "audit_modifieddate": ts})
+    new = row(
+        {
+            **{c: F.col(f"_src_{c}") for c in cols},
+            "is_current": F.lit(True),
+            "audit_insertdate": ts,
+            "audit_modifieddate": ts,
+        }
     )
-    kept_current = j.filter(~changed).select(*[F.col(c) for c in target.columns])
-
-    # keys still holding a current row after the expire pass don't re-insert
-    surviving = j.filter(~changed & F.col("_src_key").isNotNull()).select(
-        F.col(key).alias("_kept_key")
+    changed = _any_changed([c for c in compare_cols if c != key])
+    emitted = (
+        F.when(F.col("_in_cur").isNull(), F.array(new))
+        .when(F.col("_in_src").isNull(), F.array(kept))
+        .when(changed, F.array(expired, new))
+        .otherwise(F.array(kept))
     )
-    inserts = (
-        source.join(surviving, F.col(key) == F.col("_kept_key"), "left_anti")
-        .withColumn("is_current", F.lit(True))
-        .withColumn("audit_insertdate", ts)
-        .withColumn("audit_modifieddate", ts)
-        .select(*[F.col(c) for c in target.columns])
-    )
-
-    return hist.unionByName(expired).unionByName(kept_current).unionByName(inserts)
+    return hist.unionByName(j.select(F.inline(emitted)))
 
 
 def scd2_init(source: DataFrame, now: _dt.datetime) -> DataFrame:

@@ -16,6 +16,7 @@ removes its SQL-injection surface entirely.
 from __future__ import annotations
 
 import datetime as _dt
+import logging
 import os
 import threading
 from dataclasses import dataclass, field
@@ -43,6 +44,8 @@ AUDIT_SCHEMA = T.StructType(
 )
 
 NAMESPACE, TABLE = "audit", "audit_logs"
+
+log = logging.getLogger(__name__)
 
 
 @dataclass
@@ -95,6 +98,12 @@ class AuditLog:
         try:
             self._insert_arrow(row)
         except Exception:
+            # the row still lands, through a Spark job; say so, since the
+            # slow path is otherwise indistinguishable from the fast one
+            log.warning(
+                "audit insert for %s.%s fell back to a Spark write",
+                row["source_system"], row["source_object"], exc_info=True,
+            )
             df = self.wh.spark.createDataFrame(
                 [tuple(row[f.name] for f in AUDIT_SCHEMA)], AUDIT_SCHEMA
             )

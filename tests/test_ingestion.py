@@ -3,12 +3,15 @@ active-row filter, Switch dispatch per source_type, incremental watermark
 path, audited unknown-type failure, CONFIG_NOT_FOUND."""
 
 import datetime as dt
+import logging
 
 import pytest
 from pyspark.sql import functions as F
 
 from end_to_end_azure_data_engineering_spark.engine.clock import FixedClock
-from end_to_end_azure_data_engineering_spark.engine.tableio import Warehouse
+from end_to_end_azure_data_engineering_spark.engine.tableio import (
+    VersionedWarehouse, Warehouse,
+)
 from end_to_end_azure_data_engineering_spark.plans.audit import AuditLog
 from end_to_end_azure_data_engineering_spark.plans.ingestion import (
     SourceRow, load_config, run_ingestion,
@@ -74,3 +77,23 @@ def test_unknown_source_type_fails_audited(spark, setup):
         run_ingestion(audit, bad, resolvers)
     failed = audit.read().filter(F.col("status") == "FAILED").collect()
     assert any("unknown source_type 'ftp'" in (r.error_message or "") for r in failed)
+
+
+def test_audit_arrow_failure_falls_back_visibly(spark, tmp_path, monkeypatch, caplog):
+    """The Spark-write fallback of an audit insert still lands the row,
+    and says so in the log with the Arrow path's exception attached."""
+
+    def broken(self, row):
+        raise OSError("arrow writer unavailable")
+
+    audit = AuditLog(VersionedWarehouse(spark, str(tmp_path / "wh")))
+    monkeypatch.setattr(AuditLog, "_insert_arrow", broken)
+    with caplog.at_level(logging.WARNING, logger=AuditLog.__module__):
+        audit.start("bank_a", "customers")
+
+    rows = audit.read().collect()
+    assert [(r.source_object, r.status) for r in rows] == [("customers", "STARTED")]
+    [rec] = [r for r in caplog.records if "fell back to a Spark write" in r.getMessage()]
+    assert rec.levelno == logging.WARNING
+    assert "bank_a.customers" in rec.getMessage()
+    assert isinstance(rec.exc_info[1], OSError)

@@ -8,15 +8,19 @@ so the two statements are verified two ways:
 2. semantic twin: the exact UPDATE/INSERT equivalence of those two MERGEs is
    executed on DuckDB against a fixture and the final table state must equal
    the plan-form `scd2_merge` output on the same fixture — including the
-   latent null-unsafe rule (NULL→value transitions do NOT expire).
+   latent null-unsafe rule (NULL→value transitions do NOT expire) — and,
+   as a Hypothesis property, on generated targets and batches, compared
+   as row multisets.
 """
 
 from __future__ import annotations
 
 import datetime as dt
 import re
+from collections import Counter
 
 import duckdb
+from hypothesis import given, settings, strategies as st
 
 from end_to_end_azure_data_engineering_spark.operators.scd2 import (
     scd2_init,
@@ -58,6 +62,42 @@ def test_merge_sql_golden_shape():
     assert "WHEN MATCHED" not in insert.replace("WHEN NOT MATCHED", "")
 
 
+def _duckdb_merge(target_rows, batch_rows, now):
+    """The two reference MERGEs as their exact UPDATE/INSERT equivalents on
+    DuckDB (1.0 has no MERGE); returns the final table's rows."""
+    con = duckdb.connect()
+    con.execute(
+        "CREATE TABLE t (txn_id INT, amount DOUBLE, status VARCHAR, "
+        "is_current BOOLEAN, audit_insertdate TIMESTAMP, audit_modifieddate TIMESTAMP)"
+    )
+    con.execute("CREATE TABLE s (txn_id INT, amount DOUBLE, status VARCHAR)")
+    if target_rows:
+        con.executemany("INSERT INTO t VALUES (?, ?, ?, ?, ?, ?)", target_rows)
+    if batch_rows:
+        con.executemany("INSERT INTO s VALUES (?, ?, ?)", batch_rows)
+
+    # MERGE 1 equivalent: matched-and-changed current rows expire
+    con.execute(
+        f"""
+        UPDATE t SET is_current = false, audit_modifieddate = TIMESTAMP '{now}'
+        FROM s WHERE t.txn_id = s.txn_id AND t.is_current
+          AND (t.amount <> s.amount OR t.status <> s.status)
+        """
+    )
+    # MERGE 2 equivalent: source keys with no current row insert as current
+    con.execute(
+        f"""
+        INSERT INTO t
+        SELECT s.txn_id, s.amount, s.status, true,
+               TIMESTAMP '{now}', TIMESTAMP '{now}'
+        FROM s LEFT JOIN (SELECT txn_id FROM t WHERE is_current) c
+          USING (txn_id)
+        WHERE c.txn_id IS NULL
+        """
+    )
+    return con.execute("SELECT * FROM t").fetchall()
+
+
 def test_merge_sql_semantics_match_plan_form(spark):
     """Execute the MERGE statements' exact UPDATE/INSERT equivalents on
     DuckDB; final state must equal the plan-form scd2_merge (row multiset)."""
@@ -84,47 +124,84 @@ def test_merge_sql_semantics_match_plan_form(spark):
         .collect()
     }
 
-    con = duckdb.connect()
-    con.execute(
-        "CREATE TABLE t (txn_id INT, amount DOUBLE, status VARCHAR, "
-        "is_current BOOLEAN, audit_insertdate TIMESTAMP, audit_modifieddate TIMESTAMP)"
+    duck_rows = set(
+        _duckdb_merge(
+            [(r.txn_id, r.amount, r.status, True, t0, t0) for r in base.collect()],
+            [tuple(r) for r in batch.collect()],
+            t1,
+        )
     )
-    con.executemany(
-        "INSERT INTO t VALUES (?, ?, ?, true, ?, ?)",
-        [(r.txn_id, r.amount, r.status, t0, t0) for r in base.collect()],
-    )
-    con.execute("CREATE TABLE s (txn_id INT, amount DOUBLE, status VARCHAR)")
-    con.executemany(
-        "INSERT INTO s VALUES (?, ?, ?)",
-        [(r.txn_id, r.amount, r.status) for r in batch.collect()],
-    )
-
-    # MERGE 1 equivalent: matched-and-changed current rows expire
-    con.execute(
-        f"""
-        UPDATE t SET is_current = false, audit_modifieddate = TIMESTAMP '{t1}'
-        FROM s WHERE t.txn_id = s.txn_id AND t.is_current
-          AND (t.amount <> s.amount OR t.status <> s.status)
-        """
-    )
-    # MERGE 2 equivalent: source keys with no current row insert as current
-    con.execute(
-        f"""
-        INSERT INTO t
-        SELECT s.txn_id, s.amount, s.status, true,
-               TIMESTAMP '{t1}', TIMESTAMP '{t1}'
-        FROM s LEFT JOIN (SELECT txn_id FROM t WHERE is_current) c
-          USING (txn_id)
-        WHERE c.txn_id IS NULL
-        """
-    )
-    duck_rows = set(map(tuple, con.execute("SELECT * FROM t").fetchall()))
 
     assert plan_rows == duck_rows
     # the latent semantics explicitly: key 3 (NULL→300.0) kept its original
     # current row — no expire, no second version
     k3 = [r for r in duck_rows if r[0] == 3]
     assert k3 == [(3, None, "OPEN", True, t0, t0)]
+
+
+_T0, _T1, _T2 = (dt.datetime(2024, m, 1) for m in (1, 2, 3))
+_AMOUNT = st.one_of(st.none(), st.sampled_from([1.0, 2.5]))
+_STATUS = st.one_of(st.none(), st.sampled_from(["OPEN", "CLOSED"]))
+_TARGET_SCHEMA = (
+    "txn_id INT, amount DOUBLE, status STRING, is_current BOOLEAN, "
+    "audit_insertdate TIMESTAMP, audit_modifieddate TIMESTAMP"
+)
+
+
+@st.composite
+def _merge_case(draw):
+    """A target with history rows, at most one current row per key and
+    NULL compare values, and a batch with unique keys in which each current
+    key is absent, unchanged, changed, NULL→value or value→NULL, plus new
+    keys and a NULL key."""
+    hist = draw(st.lists(st.tuples(st.integers(1, 8), _AMOUNT, _STATUS), max_size=4))
+    current = draw(
+        st.lists(
+            st.tuples(st.one_of(st.none(), st.integers(1, 6)), _AMOUNT, _STATUS),
+            max_size=5, unique_by=lambda r: r[0],
+        )
+    )
+    target = [(k, a, s, False, _T0, _T1) for k, a, s in hist]
+    target += [(k, a, s, True, _T1, _T1) for k, a, s in current]
+
+    batch = []
+    for k, a, s in current:
+        if k is None:
+            continue  # a NULL key never matches: covered by the batch's own
+        kind = draw(st.sampled_from(
+            ["absent", "unchanged", "changed", "null_to_value", "value_to_null"]
+        ))
+        if kind == "unchanged":
+            batch.append((k, a, s))
+        elif kind == "changed":
+            batch.append((k, a, "CLOSED" if s == "OPEN" else "OPEN"))
+        elif kind == "null_to_value":
+            batch.append((k, 1.0 if a is None else a, "OPEN" if s is None else s))
+        elif kind == "value_to_null":
+            batch.append((k, None, s))
+    taken = {k for k, _, _ in current}
+    for k in draw(st.lists(st.integers(1, 9), max_size=3, unique=True)):
+        if k not in taken:
+            batch.append((k, draw(_AMOUNT), draw(_STATUS)))
+    if draw(st.booleans()):
+        batch.append((None, draw(_AMOUNT), draw(_STATUS)))
+    return target, batch
+
+
+@settings(max_examples=10, deadline=None)
+@given(_merge_case())
+def test_merge_matches_duckdb_twin_as_multiset(spark, case):
+    """Property form of the twin test: for generated targets and batches
+    the plan-form merge yields the DuckDB MERGE equivalent's rows, compared
+    as multisets so a duplicated or dropped row fails too."""
+    target, batch = case
+    merged = scd2_merge(
+        spark.createDataFrame(target, _TARGET_SCHEMA),
+        spark.createDataFrame(batch, "txn_id INT, amount DOUBLE, status STRING"),
+        KEY, COMPARE, _T2,
+    )
+    got = Counter(map(tuple, merged.collect()))
+    assert got == Counter(_duckdb_merge(target, batch, _T2)), case
 
 
 def test_snapshot_asof_null_unsafe_and_expiry(spark):

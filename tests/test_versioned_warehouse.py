@@ -539,3 +539,85 @@ def test_compact_partition_missing_partition_raises(spark, tmp_path):
     )
     with pytest.raises(FileNotFoundError, match="no partition"):
         vw.compact_partition("silver", "t", "bucket=9")
+
+
+def test_read_schema_equals_inference_on_every_write_path(spark, tmp_path):
+    """``read`` uses the schema recorded in a version directory instead of
+    inferring it from parquet footers. On every write path the schema it
+    returns must be the one Spark infers from the same directory, and the
+    record must be present exactly where the rules put one: commit,
+    overwrite, first and same-schema appends, inserts, restore and compact
+    keep or write it; a different-schema append, a partitioned write and
+    an insert into an unrecorded table leave the version to inference."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from end_to_end_azure_data_engineering_spark.plans.audit import AuditLog
+
+    vw = VersionedWarehouse(spark, str(tmp_path / "wh"))
+
+    def check(table, recorded, version=None, ns="gold"):
+        v = vw.current_version(ns, table) if version is None else version
+        vdir = vw.path(ns, table) / f"_v{v}"
+        assert (vdir / ".schema").exists() == recorded, (table, v)
+        assert vw.read(ns, table, version=v).schema == spark.read.parquet(str(vdir)).schema
+        return v
+
+    def wide(lo, hi):
+        # non-nullable, nested, decimal and both timestamp kinds: the cases
+        # where a frame's own schema differs from what a read reports
+        return spark.range(lo, hi).selectExpr(
+            "id", "CAST(id AS INT) AS i", "CAST(id AS DECIMAL(12, 2)) AS d",
+            "CAST(id AS DOUBLE) AS dbl", "CAST(id AS STRING) AS s",
+            "id % 2 = 0 AS flag", "DATE'2024-01-01' AS day",
+            "TIMESTAMP'2024-01-01 10:00:00' AS ts",
+            "TIMESTAMP_NTZ'2024-01-01 10:00:00' AS ntz",
+            "CAST(CAST(id AS STRING) AS BINARY) AS bin", "array(id, id) AS arr",
+            "map('k', id) AS m",
+            "named_struct('a', id, 'b', array(named_struct('c', CAST(id AS STRING)))) AS st",
+        )
+
+    v0 = vw.commit(wide(0, 10), "gold", "w")
+    check("w", True)
+    vw.overwrite(wide(10, 20), "gold", "w")
+    check("w", True)
+    vw.append(wide(20, 25), "gold", "w")
+    same = check("w", True)
+    vw.append(wide(25, 30).withColumn("extra", F.lit(1)), "gold", "w")
+    evolved = check("w", False)
+    # dropping the linked-forward record leaves the source version's own
+    check("w", True, version=same)
+    assert vw.read("gold", "w", merge_schema=True).schema == (
+        spark.read.option("mergeSchema", "true")
+        .parquet(str(vw.path("gold", "w") / f"_v{evolved}")).schema
+    )
+    vw.restore("gold", "w", v0)
+    check("w", True)
+    vw.restore("gold", "w", evolved)
+    check("w", False)
+    vw.compact("gold", "w", target_files=2)
+    check("w", True)
+    assert vw.read("gold", "w").count() == 20
+    assert vw.read("gold", "w", merge_schema=True).schema == (
+        spark.read.option("mergeSchema", "true").parquet(str(vw.data_dir("gold", "w"))).schema
+    )
+
+    vw.append(wide(0, 5), "gold", "first")
+    check("first", True)
+    vw.commit(wide(0, 10), "gold", "p", partition_by=["flag"])
+    check("p", False)
+    vw.append(wide(10, 20), "gold", "p", partition_by=["flag"])
+    check("p", False)
+
+    # the audit table: a Spark-written empty version, then Arrow-written
+    # rows inserted as files next to it
+    audit = AuditLog(vw)
+    check("audit_logs", True, ns="audit")
+    t0 = audit.start("bank_a", "customers")
+    audit.success("bank_a", "customers", t0, 3, "2024-01-02")
+    check("audit_logs", True, ns="audit")
+    assert audit.fetch_last_watermark("bank_a", "customers") == "2024-01-02"
+    arrow = pa.table({"x": [1, 2]})
+    vw.insert_file("gold", "arrow_only", "part-a.parquet", lambda tmp: pq.write_table(arrow, tmp))
+    check("arrow_only", False)

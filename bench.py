@@ -500,9 +500,7 @@ def main() -> None:
 
     import __spark_entry__ as ent
     from end_to_end_azure_data_engineering_spark.engine import get_spark
-    from end_to_end_azure_data_engineering_spark.operators.neardup import (
-        release_checkpoints,
-    )
+    from end_to_end_azure_data_engineering_spark.engine.pin import release
 
     spark = get_spark("bench")
     spark.range(1).count()  # JVM warm-up
@@ -554,7 +552,7 @@ def main() -> None:
         try:
             warm = qs[name](spark, sf_dir)
             warm.write.format("noop").mode("overwrite").save()
-            release_checkpoints(warm)
+            release(warm)
         except Exception:
             pass
         # timed runs (min-of-N, N recorded in the artifact): steady-state
@@ -578,7 +576,7 @@ def main() -> None:
                 # the plan (eager dedup/CC queries): relying on GC lag let
                 # block-manager pressure accumulate across the sweep and
                 # inflate late-list queries ~2x vs isolated runs
-                release_checkpoints(df)
+                release(df)
             except Exception as exc:  # noqa: BLE001
                 errors[name] = str(exc).splitlines()[0][:200] if str(exc) else repr(exc)
                 break
@@ -634,7 +632,7 @@ def main() -> None:
                 df = qs[name](spark, sf_dir)
                 df.write.format("noop").mode("overwrite").save()
                 el = time.perf_counter() - t0
-                release_checkpoints(df)
+                release(df)
                 if i > 0:  # run 0 re-absorbs post-GC cache state, untimed
                     samples.append(el)
         except Exception:  # noqa: BLE001 — sweep already recorded the error

@@ -17,6 +17,7 @@ import shutil
 import threading
 import time
 import uuid
+from collections.abc import Callable
 from contextlib import contextmanager
 from pathlib import Path
 
@@ -849,20 +850,7 @@ class VersionedWarehouse(Warehouse):
         cur = self.current_version(namespace, table)
         if cur is None:
             return None
-        src = self.path(namespace, table) / f"_v{cur}"
-        for f in sorted(src.rglob("*")):
-            if f.name == ".op":
-                continue
-            rel = f.relative_to(src)
-            dst = vdir / rel
-            if f.is_dir():
-                dst.mkdir(parents=True, exist_ok=True)
-            else:
-                dst.parent.mkdir(parents=True, exist_ok=True)
-                try:
-                    os.link(f, dst)
-                except OSError:
-                    shutil.copy2(f, dst)
+        self._link_files(self.path(namespace, table) / f"_v{cur}", vdir)
         return cur
 
     def append(
@@ -1021,19 +1009,25 @@ class VersionedWarehouse(Warehouse):
             )
         nxt, vdir = self._claim_next(namespace, table)
         with self._claim_keepalive(vdir):
-            self._restore_files(src, vdir)
+            self._link_files(src, vdir)
         self._stamp(vdir, f"RESTORE v{version}")
         self._publish(namespace, table, nxt)
         return nxt
 
     @staticmethod
-    def _restore_files(src: Path, vdir: Path) -> None:
+    def _link_files(
+        src: Path, vdir: Path, skip: Callable[[str], bool] = lambda rel: False
+    ) -> None:
+        """Hard-link a version's files into the claimed directory ``vdir``
+        at the same relative paths, copying where the filesystem refuses a
+        link. Relative paths for which ``skip`` is true stay out. The
+        ``.op`` stamp is never linked: writing the new version's label
+        through a shared inode would rewrite the SOURCE version's history
+        entry."""
         for f in sorted(src.rglob("*")):
-            if f.name == ".op":
-                continue  # never hard-link the stamp: writing the new
-                # version's label through a shared inode would rewrite the
-                # SOURCE version's history entry
             rel = f.relative_to(src)
+            if f.name == ".op" or skip(str(rel)):
+                continue
             dst = vdir / rel
             if f.is_dir():
                 dst.mkdir(parents=True, exist_ok=True)
@@ -1060,6 +1054,16 @@ class VersionedWarehouse(Warehouse):
         before publish, so a published version always carries its stamp).
         The hidden dot-name keeps it out of Spark's parquet file listing."""
         (vdir / ".op").write_text(op)
+
+    @staticmethod
+    def _stamped_at(vdir: Path) -> float:
+        """When ``vdir`` was stamped (its ``.op`` mtime). A version with no
+        stamp, or one another vacuum removed meanwhile, counts as stamped
+        now, which keeps the version it superseded."""
+        try:
+            return (vdir / ".op").stat().st_mtime
+        except OSError:
+            return time.time()
 
     @staticmethod
     def _record_schema(vdir: Path, schema: T.StructType | None) -> None:
@@ -1330,22 +1334,10 @@ class VersionedWarehouse(Warehouse):
         nxt, vdir = self._claim_next(namespace, table)
         with self._claim_keepalive(vdir):
             prefix = partition + "/"
-            for f in sorted(src.rglob("*")):
-                if f.name == ".op":
-                    continue
-                rel = f.relative_to(src)
-                rp = str(rel)
-                if rp == partition or rp.startswith(prefix):
-                    continue  # the partition being rewritten
-                dst = vdir / rel
-                if f.is_dir():
-                    dst.mkdir(parents=True, exist_ok=True)
-                else:
-                    dst.parent.mkdir(parents=True, exist_ok=True)
-                    try:
-                        os.link(f, dst)
-                    except OSError:
-                        shutil.copy2(f, dst)
+            # every file but the partition being rewritten
+            self._link_files(
+                src, vdir, lambda rel: rel == partition or rel.startswith(prefix)
+            )
             df.write.mode("append").parquet(str(vdir / partition))
             self._stamp(vdir, f"OPTIMIZE {partition}")
         self._publish(namespace, table, nxt)
@@ -1359,10 +1351,16 @@ class VersionedWarehouse(Warehouse):
     # heartbeat legitimizes >600 s appends while commit()/overwrite() writers
     # hold no append lock at all (r5 advice).
     PHANTOM_SWEEP_AFTER = 600.0
+    # A committed version superseded less than this long ago is never
+    # swept: a reader that resolved it while it was current may still be
+    # listing or reading its files (Delta's time-based file retention).
+    # 0 turns the horizon off, leaving the count-based keep alone.
+    SUPERSEDED_SWEEP_AFTER = 600.0
 
     def vacuum(self, namespace: str, table: str, keep: int = 2) -> list[int]:
         """Drop all but the newest `keep` COMMITTED versions (never the
-        published one). Returns removed version numbers.
+        published one) and any version superseded within
+        SUPERSEDED_SWEEP_AFTER. Returns removed version numbers.
 
         The keep-window is computed over committed versions only: a crashed
         writer's phantom claim (typically the highest number) must not
@@ -1370,13 +1368,18 @@ class VersionedWarehouse(Warehouse):
         version its time-travel history (r4 advice). Phantoms are swept
         too, but only once older than PHANTOM_SWEEP_AFTER — a young
         unstamped directory may be a slow writer's still-in-flight commit,
-        and deleting it mid-write would corrupt that commit."""
+        and deleting it mid-write would corrupt that commit.
+
+        A version stops being current when a later one publishes; its
+        superseded time is the stamp time of the next committed version
+        (``.op`` is written just before that version's publish)."""
         vs = self.versions(namespace, table)
         cur = self.current_version(namespace, table)
         if keep <= 0:
             return []
         committed = [v for v in vs if self._is_committed(namespace, table, v)]
         kept = set(committed[-keep:])
+        successor = dict(zip(committed, committed[1:]))
         now = time.time()
         removable = []
         for v in vs:
@@ -1389,6 +1392,10 @@ class VersionedWarehouse(Warehouse):
                         continue  # possibly in-flight — leave it
                 except OSError:
                     continue
+            elif self.SUPERSEDED_SWEEP_AFTER > 0:
+                nxt = self.path(namespace, table) / f"_v{successor[v]}"
+                if now - self._stamped_at(nxt) < self.SUPERSEDED_SWEEP_AFTER:
+                    continue  # a reader may still hold it
             removable.append(v)
         for v in removable:
             shutil.rmtree(self.path(namespace, table) / f"_v{v}")

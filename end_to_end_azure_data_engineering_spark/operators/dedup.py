@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
-from ..engine.pin import pin as _pin
+from ..engine.pin import pin as _pin, release
 
 
 def keep_latest(df: DataFrame, keys: list[str], order_by: list[Column]) -> DataFrame:
@@ -147,21 +147,18 @@ def connected_components(
     """
     from pyspark.sql import functions as F
 
-    # Every localCheckpoint pins blocks in the executor block manager for
-    # the session's lifetime; an iterative operator that never frees them
-    # degrades every LATER query in a long-lived session (GC pressure +
-    # storage eviction). Snapshot the persistent-RDD set on entry and free
-    # everything this call created — except the final labels, which back
-    # the returned DataFrame — before returning.
+    # Every pin holds blocks in the executor block manager until released;
+    # an iterative operator that never frees them degrades every LATER
+    # query in a long-lived session (GC pressure + storage eviction). The
+    # call frees exactly the frames it pinned — except the final labels,
+    # which back the returned DataFrame — before returning; pins other
+    # callers make meanwhile are theirs.
     sc = edges.sparkSession.sparkContext
+    pinned: list[DataFrame] = []
 
-    def _persistent_ids() -> set:
-        try:
-            return set(sc._jsc.getPersistentRDDs().keys())
-        except Exception:  # noqa: BLE001 — cleanup is best-effort
-            return set()
-
-    before_ids = _persistent_ids()
+    def pin(df: DataFrame) -> DataFrame:
+        pinned.append(_pin(df))
+        return pinned[-1]
 
     # materialize the edge list once — the upstream pair generation (minhash
     # banding or any near-dup join) must not be recomputed every round.
@@ -174,7 +171,7 @@ def connected_components(
     bidir = (
         clean.select(F.col(src).alias("_n"), F.col(dst).alias("_m"))
         .unionByName(clean.select(F.col(dst).alias("_n"), F.col(src).alias("_m")))
-        .transform(_pin)
+        .transform(pin)
     )
     if local_edges is None:
         import os
@@ -213,16 +210,8 @@ def connected_components(
         rows = _cc_local(
             [(r[0], r[1]) for r in bidir.collect()], node_type
         )
-        # free every checkpoint this call created — the returned frame is
-        # driver-local and references none of them
-        try:
-            jmap = sc._jsc.getPersistentRDDs()
-            for rid in sorted(_persistent_ids() - before_ids):
-                rdd = jmap.get(rid)
-                if rdd is not None:
-                    rdd.unpersist()
-        except Exception:  # noqa: BLE001 — cleanup is best-effort
-            pass
+        # the returned frame is driver-local and references no pin
+        release(*pinned)
         from pyspark.sql.types import StructField, StructType
 
         schema = StructType(
@@ -239,7 +228,7 @@ def connected_components(
     labels = (
         bidir.select(F.col("_n").alias("node")).distinct()
         .withColumn("label", F.col("node"))
-        .transform(_pin)
+        .transform(pin)
     )
     hash_sum = labels.agg(F.sum(F.xxhash64("label").cast("decimal(38,0)"))).first()[0]
     converged = False
@@ -263,25 +252,16 @@ def connected_components(
         labels = (
             parts.groupBy("node")
             .agg(F.min("label").alias("label"))
-            .transform(_pin)
+            .transform(pin)
         )
         new_sum = labels.agg(F.sum(F.xxhash64("label").cast("decimal(38,0)"))).first()[0]
         if new_sum == hash_sum:
             converged = True
             break
         hash_sum = new_sum
-    # free every checkpoint this call created except the newest (the final
-    # labels — lineage is truncated, so its blocks must survive until the
-    # caller consumes the result)
-    try:
-        ours = sorted(_persistent_ids() - before_ids)
-        jmap = sc._jsc.getPersistentRDDs()
-        for rid in ours[:-1]:
-            rdd = jmap.get(rid)
-            if rdd is not None:
-                rdd.unpersist()
-    except Exception:  # noqa: BLE001 — cleanup is best-effort
-        pass
+    # the final labels' blocks back the returned frame: lineage is
+    # truncated, so they must survive until the caller consumes the result
+    release(*pinned[:-1])
     if not converged:
         raise RuntimeError(
             f"connected_components did not converge in {max_iter} rounds; "

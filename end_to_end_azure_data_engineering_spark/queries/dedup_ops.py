@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 from ..functions import sketches as S
 from ..functions import text as X
 from . import load, register, spread
-from ..engine.pin import pin as _pin
+from ..engine.pin import cached, pin as _pin
 
 # Hard ceiling for the deliberately-bounded all-pairs ground-truth evals
 # below. 50k rows is the outer limit of a sane exact-eval slice: the pair
@@ -633,17 +633,16 @@ def incremental_components_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONE signature pass over the corpus serves both minings (signing is
     # the dominant cost — the old-state build below reuses the old docs'
     # rows of the same persisted frame instead of re-shingling them)
-    sig = sign_corpus(d, "doc_id", "text").persist()
-    old_pairs = pairs_from_signatures(
-        sig.filter(F.col("_id") % 3 != 0), threshold=0.2
-    )
-    # the incremental mine: batch bands x corpus bands (new-new and
-    # new-old collisions only)
-    new_pairs = pairs_from_signatures(
-        sig, threshold=0.2, batch_ids=sig.select("_id").filter(F.col("_id") % 3 == 0)
-    ).select("id_a", "id_b").transform(_pin)
-    old_state = connected_components(old_pairs.transform(_pin), "id_a", "id_b")
-    sig.unpersist()
+    with cached(sign_corpus(d, "doc_id", "text")) as sig:
+        old_pairs = pairs_from_signatures(
+            sig.filter(F.col("_id") % 3 != 0), threshold=0.2
+        )
+        # the incremental mine: batch bands x corpus bands (new-new and
+        # new-old collisions only)
+        new_pairs = pairs_from_signatures(
+            sig, threshold=0.2, batch_ids=sig.select("_id").filter(F.col("_id") % 3 == 0)
+        ).select("id_a", "id_b").transform(_pin)
+        old_state = connected_components(old_pairs.transform(_pin), "id_a", "id_b")
     merged_edges = old_state.select(
         F.col("node").alias("id_a"), F.col("label").alias("id_b")
     ).unionByName(new_pairs)
@@ -753,27 +752,25 @@ def minhash_jaccard_estimate_eval(spark: SparkSession, sf_dir: str) -> DataFrame
     from ..operators.neardup import pairs_from_signatures, sign_corpus
 
     d = spread(load(spark, sf_dir, "documents"))
-    sig = sign_corpus(d, "doc_id", "text").persist()
-    pairs = pairs_from_signatures(sig, threshold=0.2)
-    ma = sig.select(F.col("_id").alias("id_a"), F.col("mh").alias("mh_a"))
-    mb = sig.select(F.col("_id").alias("id_b"), F.col("mh").alias("mh_b"))
     n_match = F.size(
         F.filter(F.zip_with("mh_a", "mh_b", lambda x, y: x == y), lambda v: v)
     ).cast("long")
-    out = (
-        pairs.join(ma, "id_a")
-        .join(mb, "id_b")
-        .select(
-            F.col("id_a").alias("doc_a"),
-            F.col("id_b").alias("doc_b"),
-            n_match.alias("n_match"),
-            F.round(n_match.cast("double") / S.K, 6).alias("est_jaccard"),
-            F.round("jaccard", 6).alias("exact_jaccard"),
+    with cached(sign_corpus(d, "doc_id", "text")) as sig:
+        pairs = pairs_from_signatures(sig, threshold=0.2)
+        ma = sig.select(F.col("_id").alias("id_a"), F.col("mh").alias("mh_a"))
+        mb = sig.select(F.col("_id").alias("id_b"), F.col("mh").alias("mh_b"))
+        return (
+            pairs.join(ma, "id_a")
+            .join(mb, "id_b")
+            .select(
+                F.col("id_a").alias("doc_a"),
+                F.col("id_b").alias("doc_b"),
+                n_match.alias("n_match"),
+                F.round(n_match.cast("double") / S.K, 6).alias("est_jaccard"),
+                F.round("jaccard", 6).alias("exact_jaccard"),
+            )
+            .transform(_pin)
         )
-        .transform(_pin)
-    )
-    sig.unpersist()
-    return out
 
 
 @register(
@@ -830,36 +827,34 @@ def lsh_candidate_precision(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.neardup import sign_corpus
 
     d = spread(load(spark, sf_dir, "documents"))
-    sig = sign_corpus(d, "doc_id", "text").persist()
-    bands = sig.select(
-        "_id", F.explode_outer(S.band_signatures(F.col("mh"))).alias("band")
-    )
-    cands = (
-        bands.select(F.col("_id").alias("id_a"), "band")
-        .join(bands.select(F.col("_id").alias("id_b"), "band"), "band")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    out = (
-        cands.join(
-            sig.select(F.col("_id").alias("id_a"), F.col("sh").alias("sh_a")), "id_a"
+    with cached(sign_corpus(d, "doc_id", "text")) as sig:
+        bands = sig.select(
+            "_id", F.explode_outer(S.band_signatures(F.col("mh"))).alias("band")
         )
-        .join(sig.select(F.col("_id").alias("id_b"), F.col("sh").alias("sh_b")), "id_b")
-        .select(
-            F.least(
-                F.expr("(size(array_intersect(sh_a, sh_b)) * 10) div "
-                       "greatest(size(sh_a) + size(sh_b) "
-                       "- size(array_intersect(sh_a, sh_b)), 1)"),
-                F.lit(9),
-            ).cast("long").alias("jaccard_decile")
+        cands = (
+            bands.select(F.col("_id").alias("id_a"), "band")
+            .join(bands.select(F.col("_id").alias("id_b"), "band"), "band")
+            .filter(F.col("id_a") < F.col("id_b"))
+            .select("id_a", "id_b")
+            .distinct()
         )
-        .groupBy("jaccard_decile")
-        .agg(F.count("*").alias("n_pairs"))
-        .transform(_pin)
-    )
-    sig.unpersist()
-    return out
+        return (
+            cands.join(
+                sig.select(F.col("_id").alias("id_a"), F.col("sh").alias("sh_a")), "id_a"
+            )
+            .join(sig.select(F.col("_id").alias("id_b"), F.col("sh").alias("sh_b")), "id_b")
+            .select(
+                F.least(
+                    F.expr("(size(array_intersect(sh_a, sh_b)) * 10) div "
+                           "greatest(size(sh_a) + size(sh_b) "
+                           "- size(array_intersect(sh_a, sh_b)), 1)"),
+                    F.lit(9),
+                ).cast("long").alias("jaccard_decile")
+            )
+            .groupBy("jaccard_decile")
+            .agg(F.count("*").alias("n_pairs"))
+            .transform(_pin)
+        )
 
 
 @register(

@@ -60,10 +60,9 @@ def _minhash_capped_mine(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _containment_mine(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.neardup import containment_pairs_lazy
 
-    pairs, _sh = containment_pairs_lazy(
+    return containment_pairs_lazy(
         _docs(spark, sf_dir), "doc_id", "text", threshold=0.2
     )
-    return pairs
 
 
 def _incremental_mine(spark: SparkSession, sf_dir: str) -> DataFrame:

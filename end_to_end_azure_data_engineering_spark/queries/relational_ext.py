@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from . import epoch_us, load, register, spread
-from ..engine.pin import pin as _pin
+from ..engine.pin import pin as _pin, release
 
 # ---------------------------------------------------------------------------
 # As-of join — for each purchase event, the latest strictly-earlier click of
@@ -2161,13 +2161,11 @@ def pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
                 StructField("degree", LongType(), True),
             ]
         )
-        from ..operators.neardup import release_checkpoints
-
         sc = spark.sparkContext
         out = spark.createDataFrame(
             sc.parallelize(rows, 1) if rows else sc.parallelize([], 1), schema
         )
-        release_checkpoints(ew)
+        release(ew)
         return out
     return pagerank_iterations_plan(ew)
 
@@ -3166,7 +3164,7 @@ def copurchase_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # distinct each time). Pin it once: guide §5's cache-when-reused —
     # at scale one corpus-sized materialization read three times beats
     # three scan+shuffle recomputes, and the pin is released by the
-    # caller's release_checkpoints like every eager query.
+    # caller's engine.pin.release like every eager query.
     li = (
         load(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_partkey")

@@ -33,7 +33,7 @@ from ..engine.clock import Clock, SystemClock
 from ..engine.tableio import Warehouse
 from ..operators.dedup import latest_by_recency
 from ..operators.scd2 import scd2_init, scd2_merge
-from ..engine.pin import pin as _pin
+from ..engine.pin import cached, pin as _pin, release
 
 
 def _query_lineage_id(spark: SparkSession) -> str:
@@ -535,6 +535,58 @@ def interval_join_events(
     ).select(F.col("_k").alias(key), "l_id", "l_ts", "r_id", "r_ts", "r_value")
 
 
+def _compact_signatures(
+    wh: Warehouse, namespace: str, sig_table: str, sig_buckets: int | None
+) -> None:
+    """Small-file control of the dedup sink's signature store: every
+    append adds one file set, so after N epochs the store is N-way
+    fragmented and each batch's anti-join and band mine pay N file opens.
+    Partitioned store + MVCC warehouse: rewrite only the fragmented
+    BUCKETS (OPTIMIZE-WHERE; O(bucket) each, non-target files
+    hard-linked). Otherwise: whole-table compact past the global
+    threshold — amortized O(corpus / SIG_COMPACT_FILES) per epoch."""
+    try:
+        ddir = wh.data_dir(namespace, sig_table)
+    except (FileNotFoundError, OSError):
+        ddir = None
+    if ddir is not None and sig_buckets and hasattr(wh, "compact_partition"):
+        # re-resolve the data dir per bucket: each compact_partition
+        # publishes a new version and autovacuum may delete the dir
+        # this loop started from (stale paths then read as empty and
+        # the remaining buckets silently skip)
+        for bname in sorted(p.name for p in ddir.glob("bucket=*")):
+            try:
+                bdir = wh.data_dir(namespace, sig_table) / bname
+                frag = len(list(bdir.glob("*.parquet")))
+            except (FileNotFoundError, OSError):
+                continue
+            try:
+                bucket_no = int(bname.split("=", 1)[1])
+            except ValueError:
+                bucket_no = 0
+            # staggered threshold: see SIG_COMPACT_STAGGER — keeps the
+            # buckets' compaction cycles out of phase so an epoch never
+            # rewrites the whole store at once
+            if frag > _bucket_compact_threshold(bucket_no):
+                wh.compact_partition(namespace, sig_table, bname)
+    elif ddir is not None:
+        n_files = len(list(ddir.glob("*.parquet")))
+        if n_files > SIG_COMPACT_FILES:
+            # Target capped BELOW the refire threshold (r6 advice): on a
+            # cluster whose defaultParallelism exceeds SIG_COMPACT_FILES
+            # an uncapped target would leave the store permanently above
+            # the threshold and refire the O(corpus) rewrite every epoch.
+            wh.compact(
+                namespace,
+                sig_table,
+                min(
+                    wh.spark.sparkContext.defaultParallelism,
+                    SIG_COMPACT_FILES // 2,
+                ),
+                cluster_by=["_id"],
+            )
+
+
 def dedup_stream_sink(
     wh: Warehouse,
     id_col: str = "doc_id",
@@ -576,11 +628,7 @@ def dedup_stream_sink(
     before returning (block-manager hygiene on a per-micro-batch hot
     path)."""
     from ..operators.dedup import connected_components
-    from ..operators.neardup import (
-        pairs_from_signatures,
-        release_checkpoints,
-        sign_corpus,
-    )
+    from ..operators.neardup import pairs_from_signatures, sign_corpus
 
     if hasattr(wh, "set_retention"):
         # MVCC warehouse: every epoch publishes a state version and a
@@ -607,114 +655,66 @@ def dedup_stream_sink(
             batch.select(id_col, text_col).dropDuplicates([id_col]),
             id_col,
             text_col,
-        ).persist()
-        if wh.exists(namespace, sig_table):
-            stored = wh.read(namespace, sig_table)
-            if sig_buckets:
-                stored = stored.drop("bucket")
-            # anti-join: a crash after the signature publish but before the
-            # state publish replays this epoch with the batch already
-            # stored — appending again would duplicate signature rows
-            sig_to_add = sig_new.join(stored.select("_id"), "_id", "left_anti")
-            corpus_sig = stored.unionByName(sig_to_add)
-        else:
-            sig_to_add = sig_new
-            corpus_sig = sig_new
-        corpus_sig = corpus_sig.persist()
-
-        # bucket_cap: the standing corpus side grows without bound, so a
-        # hot band bucket (boilerplate/template text) would otherwise pay
-        # O(bucket x batch) candidates EVERY epoch forever; over-cap
-        # buckets degrade to star candidates against the bucket hub
-        # (connectivity-preserving for true duplicate clusters — see
-        # pairs_from_signatures). The cap never binds at test corpora
-        # sizes, so batch-parity with the exact form holds there.
-        new_pairs = pairs_from_signatures(
-            corpus_sig,
-            threshold,
-            batch_ids=sig_new.select("_id"),
-            bucket_cap=SIG_HOT_BUCKET_CAP,
-        ).select("id_a", "id_b")
-        edges = (
-            old_state.select(F.col("node").alias("id_a"), F.col("label").alias("id_b"))
-            .unionByName(new_pairs)
-            if old_state is not None
-            else new_pairs
         )
-        new_state = connected_components(edges, "id_a", "id_b").transform(_pin)
-
-        # publish order matters: signatures first (replay-safe via the
-        # anti-join), THEN the state carrying the epoch high-water mark —
-        # the reverse order could skip a replay whose signatures were lost
-        if sig_buckets:
-            sig_out = sig_to_add.withColumn(
-                "bucket",
-                F.pmod(F.xxhash64(F.col("_id")), F.lit(sig_buckets)).cast("int"),
-            ).coalesce(SIG_APPEND_FILES)
+        with cached(sig_new):
             if wh.exists(namespace, sig_table):
-                wh.append(sig_out, namespace, sig_table, partition_by=["bucket"])
+                stored = wh.read(namespace, sig_table)
+                if sig_buckets:
+                    stored = stored.drop("bucket")
+                # anti-join: a crash after the signature publish but before the
+                # state publish replays this epoch with the batch already
+                # stored — appending again would duplicate signature rows
+                sig_to_add = sig_new.join(stored.select("_id"), "_id", "left_anti")
+                corpus_sig = stored.unionByName(sig_to_add)
             else:
-                wh.overwrite(sig_out, namespace, sig_table, partition_by=["bucket"])
-        elif wh.exists(namespace, sig_table):
-            wh.append(sig_to_add.coalesce(SIG_APPEND_FILES), namespace, sig_table)
-        else:
-            wh.overwrite(sig_to_add, namespace, sig_table)
-        # Small-file control: every append adds one file set, so after N
-        # epochs the store is N-way fragmented and each batch's anti-join
-        # and band mine pay N file opens. Partitioned store + MVCC
-        # warehouse: rewrite only the fragmented BUCKETS (OPTIMIZE-WHERE;
-        # O(bucket) each, non-target files hard-linked). Otherwise:
-        # whole-table compact past the global threshold — amortized
-        # O(corpus / SIG_COMPACT_FILES) per epoch.
-        try:
-            ddir = wh.data_dir(namespace, sig_table)
-        except (FileNotFoundError, OSError):
-            ddir = None
-        if ddir is not None and sig_buckets and hasattr(wh, "compact_partition"):
-            # re-resolve the data dir per bucket: each compact_partition
-            # publishes a new version and autovacuum may delete the dir
-            # this loop started from (stale paths then read as empty and
-            # the remaining buckets silently skip)
-            for bname in sorted(p.name for p in ddir.glob("bucket=*")):
-                try:
-                    bdir = wh.data_dir(namespace, sig_table) / bname
-                    frag = len(list(bdir.glob("*.parquet")))
-                except (FileNotFoundError, OSError):
-                    continue
-                try:
-                    bucket_no = int(bname.split("=", 1)[1])
-                except ValueError:
-                    bucket_no = 0
-                # staggered threshold: see SIG_COMPACT_STAGGER — keeps the
-                # buckets' compaction cycles out of phase so an epoch never
-                # rewrites the whole store at once
-                if frag > _bucket_compact_threshold(bucket_no):
-                    wh.compact_partition(namespace, sig_table, bname)
-        elif ddir is not None:
-            n_files = len(list(ddir.glob("*.parquet")))
-            if n_files > SIG_COMPACT_FILES:
-                # Target capped BELOW the refire threshold (r6 advice): on a
-                # cluster whose defaultParallelism exceeds SIG_COMPACT_FILES
-                # an uncapped target would leave the store permanently above
-                # the threshold and refire the O(corpus) rewrite every epoch.
-                wh.compact(
-                    namespace,
-                    sig_table,
-                    min(
-                        spark.sparkContext.defaultParallelism,
-                        SIG_COMPACT_FILES // 2,
-                    ),
-                    cluster_by=["_id"],
+                sig_to_add = sig_new
+                corpus_sig = sig_new
+            with cached(corpus_sig):
+                # bucket_cap: the standing corpus side grows without bound, so a
+                # hot band bucket (boilerplate/template text) would otherwise pay
+                # O(bucket x batch) candidates EVERY epoch forever; over-cap
+                # buckets degrade to star candidates against the bucket hub
+                # (connectivity-preserving for true duplicate clusters — see
+                # pairs_from_signatures). The cap never binds at test corpora
+                # sizes, so batch-parity with the exact form holds there.
+                new_pairs = pairs_from_signatures(
+                    corpus_sig,
+                    threshold,
+                    batch_ids=sig_new.select("_id"),
+                    bucket_cap=SIG_HOT_BUCKET_CAP,
+                ).select("id_a", "id_b")
+                edges = (
+                    old_state.select(F.col("node").alias("id_a"), F.col("label").alias("id_b"))
+                    .unionByName(new_pairs)
+                    if old_state is not None
+                    else new_pairs
                 )
-        wms[qid] = epoch
-        wh.overwrite(
-            _stamp_watermarks(new_state, wms), namespace, state_table
-        )
-        corpus_sig.unpersist()
-        sig_new.unpersist()
-        # the state frame is a localCheckpoint: plain unpersist is a no-op
-        # for its blocks — release the backing LogicalRDD explicitly or a
-        # continuous stream accretes one state copy per micro-batch
-        release_checkpoints(new_state)
+                new_state = connected_components(edges, "id_a", "id_b").transform(_pin)
+
+                # publish order matters: signatures first (replay-safe via the
+                # anti-join), THEN the state carrying the epoch high-water mark —
+                # the reverse order could skip a replay whose signatures were lost
+                if sig_buckets:
+                    sig_out = sig_to_add.withColumn(
+                        "bucket",
+                        F.pmod(F.xxhash64(F.col("_id")), F.lit(sig_buckets)).cast("int"),
+                    ).coalesce(SIG_APPEND_FILES)
+                    if wh.exists(namespace, sig_table):
+                        wh.append(sig_out, namespace, sig_table, partition_by=["bucket"])
+                    else:
+                        wh.overwrite(sig_out, namespace, sig_table, partition_by=["bucket"])
+                elif wh.exists(namespace, sig_table):
+                    wh.append(sig_to_add.coalesce(SIG_APPEND_FILES), namespace, sig_table)
+                else:
+                    wh.overwrite(sig_to_add, namespace, sig_table)
+                _compact_signatures(wh, namespace, sig_table, sig_buckets)
+                wms[qid] = epoch
+                wh.overwrite(
+                    _stamp_watermarks(new_state, wms), namespace, state_table
+                )
+        # the state frame is a pin: plain unpersist is a no-op for its
+        # blocks — release it explicitly or a continuous stream accretes
+        # one state copy per micro-batch
+        release(new_state)
 
     return sink

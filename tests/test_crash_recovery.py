@@ -44,6 +44,7 @@ from end_to_end_azure_data_engineering_spark.engine.tableio import VersionedWare
 VersionedWarehouse.LOCK_STEAL_AFTER = 2.0
 VersionedWarehouse.LOCK_HEARTBEAT = 0.5
 VersionedWarehouse.PTR_STEAL_AFTER = 1.0
+VersionedWarehouse.SUPERSEDED_SWEEP_AFTER = 0.0
 
 root, tag, n = sys.argv[2], sys.argv[3], int(sys.argv[4])
 wh = VersionedWarehouse(None, root, autovacuum_keep=3)

@@ -5,6 +5,7 @@ bound has to live in code, not in a docstring)."""
 import pytest
 from pyspark.sql import functions as F
 
+from end_to_end_azure_data_engineering_spark.engine.pin import release
 from end_to_end_azure_data_engineering_spark.queries import dedup_ops
 from end_to_end_azure_data_engineering_spark.queries.dedup_ops import (
     assert_bounded_slice,
@@ -63,7 +64,7 @@ def _cached_rdd_ids(spark) -> set[int]:
 
 def test_release_checkpoints_returns_block_count_to_baseline(spark):
     """r4 verdict item 7: repeated near_dup_pairs calls retain
-    checkpointed pair blocks until driver GC. release_checkpoints must
+    checkpointed pair blocks until driver GC. engine.pin.release must
     free them deterministically — every block the test created is gone
     after release. Asserted on the ids of OUR blocks, not the global
     storage-info count: Spark's async ContextCleaner (and other fixtures'
@@ -73,7 +74,6 @@ def test_release_checkpoints_returns_block_count_to_baseline(spark):
 
     from end_to_end_azure_data_engineering_spark.operators.neardup import (
         near_dup_pairs,
-        release_checkpoints,
     )
     from end_to_end_azure_data_engineering_spark.queries import load
 
@@ -87,7 +87,7 @@ def test_release_checkpoints_returns_block_count_to_baseline(spark):
     created = _cached_rdd_ids(spark) - before
     assert created  # the leak the helper exists to fix
     for p in frames:
-        release_checkpoints(p)
+        release(p)
     deadline = time.time() + 30.0
     while _cached_rdd_ids(spark) & created and time.time() < deadline:
         time.sleep(0.2)
@@ -98,10 +98,6 @@ def test_release_checkpoints_sees_through_derived_plans(spark):
     """The helper must find the LogicalRDD leaf under projections/filters
     added on top of the checkpointed frame (callers rarely hold the raw
     checkpoint handle)."""
-    from end_to_end_azure_data_engineering_spark.operators.neardup import (
-        release_checkpoints,
-    )
-
     import time
 
     before = _cached_rdd_ids(spark)
@@ -110,11 +106,56 @@ def test_release_checkpoints_sees_through_derived_plans(spark):
     derived = ck.filter(F.col("y") > 10).select("id")
     created = _cached_rdd_ids(spark) - before
     assert created
-    release_checkpoints(derived)
+    release(derived)
     deadline = time.time() + 30.0
     while _cached_rdd_ids(spark) & created and time.time() < deadline:
         time.sleep(0.2)
     assert not (_cached_rdd_ids(spark) & created)
+
+
+@pytest.mark.parametrize("local_edges", [None, 0], ids=["local", "distributed"])
+def test_connected_components_frees_only_its_own_pins(spark, monkeypatch, local_edges):
+    """connected_components releases exactly the frames it pinned. A frame
+    another caller pins while the call runs (injected here at the call's
+    first pin) survives on both routes; freeing every RDD the session
+    persisted during the call freed it too."""
+    from end_to_end_azure_data_engineering_spark.engine.pin import pin
+    from end_to_end_azure_data_engineering_spark.operators import dedup
+
+    foreign = []
+    own_pin = dedup._pin
+
+    def pin_beside_a_foreign_caller(df):
+        if not foreign:
+            foreign.append(pin(spark.range(100)))
+        return own_pin(df)
+
+    monkeypatch.setattr(dedup, "_pin", pin_beside_a_foreign_caller)
+    edges = spark.createDataFrame([(1, 2), (2, 3), (5, 6)], "src LONG, dst LONG")
+    labels = dedup.connected_components(edges, local_edges=local_edges)
+    assert {(r.node, r.label) for r in labels.collect()} == {
+        (1, 1), (2, 1), (3, 1), (5, 5), (6, 5)
+    }
+    assert foreign[0].count() == 100
+    release(foreign[0], labels)
+
+
+def test_failing_pin_in_a_cached_scope_leaves_no_cache_entry(spark, monkeypatch):
+    """near_dup_pairs persists the signature frame for one ``cached``
+    scope; a pin that raises inside it must not leave the CacheManager
+    entry behind (entries outlive the frame object)."""
+    from end_to_end_azure_data_engineering_spark.operators import neardup
+    from end_to_end_azure_data_engineering_spark.queries import load
+
+    def failing_pin(df):
+        raise RuntimeError("pin failed")
+
+    monkeypatch.setattr(neardup, "_pin", failing_pin)
+    spark.catalog.clearCache()
+    docs = load(spark, SF_DIR, "documents").select("doc_id", "text")
+    with pytest.raises(RuntimeError, match="pin failed"):
+        neardup.near_dup_pairs(docs, "doc_id", "text", threshold=0.2)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 # ---------------------------------------------------------------------------
@@ -346,7 +387,6 @@ def test_sharded_miner_matches_one_shot_exactly(spark):
     from end_to_end_azure_data_engineering_spark.operators.neardup import (
         near_dup_pairs,
         near_dup_pairs_sharded,
-        release_checkpoints,
     )
 
     from end_to_end_azure_data_engineering_spark.queries import load
@@ -355,14 +395,14 @@ def test_sharded_miner_matches_one_shot_exactly(spark):
     # threshold low enough that verification keeps a meaningful pair set
     ref = near_dup_pairs(docs, "doc_id", "text", threshold=0.2)
     want = _pair_set(ref)
-    release_checkpoints(ref)
+    release(ref)
     assert want, "fixture must produce a non-empty pair set"
     for passes in (1, 2, 4):
         got_df = near_dup_pairs_sharded(
             docs, "doc_id", "text", threshold=0.2, band_passes=passes
         )
         got = _pair_set(got_df)
-        release_checkpoints(got_df)
+        release(got_df)
         assert got == want, f"band_passes={passes} diverged"
 
 
@@ -373,18 +413,17 @@ def test_sharded_miner_matches_one_shot_under_bucket_cap(spark):
     from end_to_end_azure_data_engineering_spark.operators.neardup import (
         near_dup_pairs,
         near_dup_pairs_sharded,
-        release_checkpoints,
     )
 
     docs = _identical_corpus(spark)
     ref = near_dup_pairs(docs, "doc_id", "text", threshold=0.1, bucket_cap=3)
     want = _pair_set(ref)
-    release_checkpoints(ref)
+    release(ref)
     got_df = near_dup_pairs_sharded(
         docs, "doc_id", "text", threshold=0.1, band_passes=2, bucket_cap=3
     )
     got = _pair_set(got_df)
-    release_checkpoints(got_df)
+    release(got_df)
     assert got == want
 
 
@@ -409,13 +448,12 @@ def test_sharded_workspace_is_cleaned_up(spark, tmp_path):
 
     from end_to_end_azure_data_engineering_spark.operators.neardup import (
         near_dup_pairs_sharded,
-        release_checkpoints,
     )
 
     docs = _identical_corpus(spark)
     before = set(os.listdir("/tmp"))
     df = near_dup_pairs_sharded(docs, "doc_id", "text", threshold=0.1)
-    release_checkpoints(df)
+    release(df)
     leaked = {
         d for d in set(os.listdir("/tmp")) - before if d.startswith("neardup_shard_")
     }
@@ -424,7 +462,7 @@ def test_sharded_workspace_is_cleaned_up(spark, tmp_path):
     df = near_dup_pairs_sharded(
         docs, "doc_id", "text", threshold=0.1, work_dir=str(keep)
     )
-    release_checkpoints(df)
+    release(df)
     assert (keep / "mh").exists() and (keep / "cands").exists()
 
 

@@ -390,10 +390,8 @@ def test_pagerank_local_route(spark, monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_PR_LOCAL_EDGES", "0")
     df = pagerank_copurchase(spark, sf)
     dist = [(r.part, r.rank_millionths, r.degree) for r in df.collect()]
-    from end_to_end_azure_data_engineering_spark.operators.neardup import (
-        release_checkpoints,
-    )
+    from end_to_end_azure_data_engineering_spark.engine.pin import release
 
-    release_checkpoints(df)
+    release(df)
     assert local == dist
     assert 0 < len(local) <= 100

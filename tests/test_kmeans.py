@@ -150,11 +150,9 @@ def test_lloyd_query_releases_staged_pin(spark):
     queries()['kmeans_lloyd_3iter'] call must not leave the corpus-scale
     staged-vector pin behind — the query releases it itself after pinning
     the bounded K x d final aggregate, so a caller that discards the frame
-    leaks at most K x d rows, and release_checkpoints on the returned
+    leaks at most K x d rows, and engine.pin.release on the returned
     frame leaves nothing at all."""
-    from end_to_end_azure_data_engineering_spark.operators.neardup import (
-        release_checkpoints,
-    )
+    from end_to_end_azure_data_engineering_spark.engine.pin import release
     from end_to_end_azure_data_engineering_spark.queries.similarity_ops import (
         _KM_K,
         kmeans_lloyd_3iter,
@@ -169,6 +167,6 @@ def test_lloyd_query_releases_staged_pin(spark):
     assert len(new) <= 1, f"staged pin leaked: {sorted(new)}"
     n = df.count()
     assert n <= _KM_K * 64  # bounded, never corpus-sized
-    release_checkpoints(df)
+    release(df)
     after = set(sc._jsc.getPersistentRDDs().keys())
     assert after - before == set(), "returned pin not releasable"

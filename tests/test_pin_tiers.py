@@ -32,11 +32,20 @@ def test_pin_defaults_to_local_checkpoint(spark):
     assert "LogicalRDD" in df._jdf.queryExecution().analyzed().toString()
 
 
-def test_pin_reliable_requires_dir(spark):
-    import pytest as _pytest
+def test_release_logs_a_frame_it_cannot_walk(caplog):
+    """release never raises on a frame whose plan it cannot walk, and
+    never hides the failure: it logs a warning with the exception."""
+    import logging
 
-    with _pytest.raises(Exception):
-        pin(spark.range(3), reliable=True).count()
+    from end_to_end_azure_data_engineering_spark.engine.pin import release
+
+    class Unwalkable:
+        _jdf = None
+
+    with caplog.at_level(logging.WARNING, logger=release.__module__):
+        release(Unwalkable())
+    (rec,) = caplog.records
+    assert rec.exc_info and rec.exc_info[0] is AttributeError
 
 
 def test_reliable_tier_upgrades_every_pin_site(tmp_path):
@@ -143,10 +152,8 @@ def test_iterative_operator_reliable_checkpoints_cleaned(tmp_path):
         assert glob.glob("{tmp_path}/ckpt/*/rdd-*"), (
             "iterative rounds wrote no reliable checkpoints")
         # release the result and let the ContextCleaner reap the files
-        from end_to_end_azure_data_engineering_spark.operators.neardup import (
-            release_checkpoints,
-        )
-        release_checkpoints(labels)
+        from end_to_end_azure_data_engineering_spark.engine.pin import release
+        release(labels)
         del labels
         import gc
         deadline = time.time() + 60

@@ -450,33 +450,53 @@ def test_bigram_lift_leaves_no_cache_entries(spark):
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
-def test_persist_sites_balance_unpersist():
+def test_only_engine_pin_materializes_frames():
     """Static fence for the bigram_lift leak class (r8 ADVICE, second
     instance found in embedding_top_eigen_power r9): a .persist() whose
     frame is returned lazily leaks its CacheManager entry per invocation
     — entries are keyed by logical plan and survive object GC. Every
-    source file must pair its persist() calls with at least as many
-    unpersist() calls (eager use-then-release), use engine.pin (blocks
-    reaped by the ContextCleaner), or carry an allowlist entry naming
-    the caller contract that releases the frame."""
+    materialization goes through engine/pin.py instead: ``pin`` (freed
+    by ``release``) or a ``cached`` scope, which unpersists on exit also
+    when its block raises. No other package file may persist, cache,
+    checkpoint, unpersist or read the session-wide RDD registry."""
     from pathlib import Path
 
     pkg = Path(__file__).resolve().parents[1] / "end_to_end_azure_data_engineering_spark"
-    # _candidate_pairs_with_shingles returns a persisted frame its caller
-    # must release (docstring contract); the callers' own unpersists keep
-    # neardup.py balanced today, so no entry is currently needed.
-    allowed: dict[str, str] = {}
-    offenders = []
-    for f in pkg.rglob("*.py"):
-        src = f.read_text()
-        n_p = src.count(".persist(")
-        n_u = src.count(".unpersist(")
-        if n_p > n_u and str(f) not in allowed:
-            offenders.append(f"{f}: persist={n_p} unpersist={n_u}")
-    assert not offenders, (
-        "persist() without a matching release — use engine.pin or "
-        f"unpersist after the final action: {offenders}"
+    owner = pkg / "engine" / "pin.py"
+    calls = (
+        ".persist(", ".unpersist(", ".cache()", "localCheckpoint(",
+        ".checkpoint(", "getPersistentRDDs",
     )
+    offenders = [
+        f"{f.relative_to(pkg)}: {c}"
+        for f in sorted(pkg.rglob("*.py"))
+        if f != owner
+        for c in calls
+        if c in f.read_text()
+    ]
+    assert not offenders, (
+        "materialize or free frames through engine.pin (pin / cached / "
+        f"release): {offenders}"
+    )
+
+
+def test_lazy_stages_leave_no_cache_entries(spark):
+    """Building the lazy twins, as the ``plans`` fixture and
+    tools/plan_audit.py do, must leave the CacheManager empty: a twin
+    that persists registers an entry nothing ever unpersists."""
+    from end_to_end_azure_data_engineering_spark.queries.lazy_stages import (
+        lazy_stages,
+    )
+
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    leaked = []
+    for name, fn in lazy_stages().items():
+        fn(spark, SF_DIR)
+        if not cm.isEmpty():
+            leaked.append(name)
+            spark.catalog.clearCache()
+    assert not leaked, f"lazy twins left cache entries: {leaked}"
 
 
 def test_eigen_power_leaves_no_cache_entries(spark):

@@ -16,6 +16,13 @@ def vwh(spark, tmp_path):
     return VersionedWarehouse(spark, str(tmp_path / "wh"))
 
 
+@pytest.fixture()
+def count_vacuum(monkeypatch):
+    """Count-based vacuum only: versions superseded moments ago are
+    swept at once, so a test can assert the keep-window."""
+    monkeypatch.setattr(VersionedWarehouse, "SUPERSEDED_SWEEP_AFTER", 0.0)
+
+
 def _df(spark, *vals):
     return spark.createDataFrame([(v,) for v in vals], "x INT")
 
@@ -57,7 +64,7 @@ def test_snapshot_isolation_for_inflight_reader(spark, vwh):
     assert {r.x for r in vwh.read("silver", "t").collect()} == {99}
 
 
-def test_vacuum_keeps_published_and_recent(spark, vwh):
+def test_vacuum_keeps_published_and_recent(spark, vwh, count_vacuum):
     for i in range(4):
         vwh.commit(_df(spark, i), "silver", "t")
     removed = vwh.vacuum("silver", "t", keep=2)
@@ -234,7 +241,7 @@ def test_restore_missing_version_raises(spark, vwh):
         vwh.restore("gold", "r2", 7)
 
 
-def test_restore_survives_vacuum_of_source_version(spark, vwh):
+def test_restore_survives_vacuum_of_source_version(spark, vwh, count_vacuum):
     """Hard-linked restore files stay valid when the SOURCE version
     directory is vacuumed away (link count semantics, not path sharing)."""
     vwh.commit(spark.range(8), "gold", "r3")   # v0
@@ -245,7 +252,7 @@ def test_restore_survives_vacuum_of_source_version(spark, vwh):
     assert vwh.read("gold", "r3").count() == 8
 
 
-def test_history_describes_versions_with_ops(spark, vwh):
+def test_history_describes_versions_with_ops(spark, vwh, count_vacuum):
     """DESCRIBE HISTORY parity: newest-first entries carry operation
     labels, file stats, and the current-pointer marker; a restore stamps
     its own label without rewriting the source version's entry."""
@@ -288,7 +295,7 @@ def test_compact_on_versioned_warehouse_reports_real_count(spark, vwh):
     assert vwh.history("gold", "cpt")[0]["operation"] == "OVERWRITE"
 
 
-def test_autovacuum_prunes_after_each_publish(spark, tmp_path):
+def test_autovacuum_prunes_after_each_publish(spark, tmp_path, count_vacuum):
     """autovacuum_keep=N keeps history bounded inline (Delta retention
     parity) — append-heavy tables like the audit log stay at N versions
     instead of one per inserted row."""
@@ -324,7 +331,27 @@ def test_failed_insert_leaves_no_restorable_phantom(spark, vwh):
     assert vwh.read("gold", "fi").count() == 6
 
 
-def test_per_table_retention_spares_other_tables(spark, tmp_path):
+def test_vacuum_spares_a_version_a_reader_resolved(spark, tmp_path):
+    """Audit retention (8 versions) must not delete the version a
+    concurrent reader listed: parallel ingestion stages insert audit rows
+    while another stage's watermark fetch reads the table. A superseded
+    version survives vacuum for SUPERSEDED_SWEEP_AFTER, as Delta keeps
+    removed files for its retention duration."""
+    import datetime as dt
+
+    from end_to_end_azure_data_engineering_spark.plans.audit import AuditLog
+
+    audit = AuditLog(VersionedWarehouse(spark, str(tmp_path / "wh")))
+    t0 = dt.datetime(2024, 3, 1)
+    audit.success("bank_a", "customers", t0, 1, "w0")
+    r = audit.read()
+    for i in range(9):
+        audit.success("bank_a", "accounts", t0, i, f"w{i}")
+    assert r.count() == 1
+    assert audit.read().count() == 10
+
+
+def test_per_table_retention_spares_other_tables(spark, tmp_path, count_vacuum):
     """set_retention scopes pruning to ONE table: bounding the audit log
     leaves gold time travel intact."""
     from end_to_end_azure_data_engineering_spark.engine.tableio import (
@@ -342,7 +369,7 @@ def test_per_table_retention_spares_other_tables(spark, tmp_path):
     assert vw.read("audit", "log").count() == 4             # no rows lost
 
 
-def test_phantom_claim_does_not_consume_keep_slot(spark, vwh):
+def test_phantom_claim_does_not_consume_keep_slot(spark, vwh, count_vacuum):
     """r4 advice: vacuum's keep-window is computed over COMMITTED versions
     only — a crashed claim (highest number) must not silently cost one
     real committed version its time-travel slot."""
@@ -358,7 +385,7 @@ def test_phantom_claim_does_not_consume_keep_slot(spark, vwh):
     assert vwh.read("gold", "t", version=1).count() == 1
 
 
-def test_young_phantom_spared_old_phantom_swept(spark, vwh):
+def test_young_phantom_spared_old_phantom_swept(spark, vwh, count_vacuum):
     vwh.commit(_df(spark, 1), "gold", "t")
     young = vwh.path("gold", "t") / "_v1"
     young.mkdir()

@@ -173,9 +173,7 @@ def main() -> int:
         flush=True,
     )
 
-    from end_to_end_azure_data_engineering_spark.operators.neardup import (
-        release_checkpoints,
-    )
+    from end_to_end_azure_data_engineering_spark.engine.pin import release
 
     print("mining EXACT (cap=None) ...", flush=True)
     exact_pairs, exact_losers, n_exact, exact_comps, exact_wall = mine(
@@ -200,7 +198,7 @@ def main() -> int:
             "capped pairs must be a subset of exact pairs "
             f"(cap={cap}: {extras} extras)"
         )
-        release_checkpoints(pairs)
+        release(pairs)
         surv = all_ids - losers
         jacc = len(surv & exact_surv) / len(surv | exact_surv)
         extra_kept = len(surv - exact_surv)
@@ -213,7 +211,7 @@ def main() -> int:
             f"{jacc:>9.4f} {extra_kept:>10} {bg_mismatch:>11} {wall:>7.1f}",
             flush=True,
         )
-    release_checkpoints(exact_pairs)
+    release(exact_pairs)
     return 0
 
 

@@ -71,9 +71,7 @@ def main() -> int:
 
     import __spark_entry__ as ent
     from end_to_end_azure_data_engineering_spark.engine import get_spark
-    from end_to_end_azure_data_engineering_spark.operators.neardup import (
-        release_checkpoints,
-    )
+    from end_to_end_azure_data_engineering_spark.engine.pin import release
 
     spark = get_spark("check_oracle")
     con = duckdb.connect()
@@ -94,12 +92,11 @@ def main() -> int:
             # deterministic checkpoint release (same mechanism as bench.py):
             # eager dedup/CC queries otherwise accumulate block-manager
             # pressure across the 202-query sweep
-            release_checkpoints(sdf)
-            # .persist() sites (signature frames, Gram matrix, vocabulary
-            # aggregates) register in the CacheManager by LOGICAL PLAN and
-            # stay there until unpersist/clearCache — object GC never
-            # removes the entry, so a full sweep would otherwise
-            # accumulate one cached frame per persist-using query.
+            release(sdf)
+            # CacheManager entries are keyed by LOGICAL PLAN and object GC
+            # never removes them; the package's engine.pin.cached scopes
+            # drop theirs on exit, and this clear keeps any other entry
+            # from carrying into the next query.
             # Correctness runs never reuse caches across queries; bench.py
             # deliberately does NOT do this (its warm second run may reuse
             # a query's own cached frames — documented methodology).

@@ -77,9 +77,7 @@ def main() -> int:
 
     import __spark_entry__ as ent
     from end_to_end_azure_data_engineering_spark.engine import get_spark
-    from end_to_end_azure_data_engineering_spark.operators.neardup import (
-        release_checkpoints,
-    )
+    from end_to_end_azure_data_engineering_spark.engine.pin import release
 
     spark = get_spark("decade_probe")
     spark.sparkContext.setLogLevel("ERROR")
@@ -94,7 +92,7 @@ def main() -> int:
             df = fn(spark, sf_dir)
             df.write.format("noop").mode("overwrite").save()
             el = time.perf_counter() - t0
-            release_checkpoints(df)
+            release(df)
             best = el if best is None else min(best, el)
             try:
                 spark.sparkContext._jvm.System.gc()
